@@ -380,12 +380,19 @@ def cmd_quantiles(args, spark) -> dict:
         )
     else:
         out = bottomk_quantiles(df, args.value_col, args.key_col, args.k, qs)
+    # the operators return unordered rows: order by (group, q) here,
+    # null groups first as Spark's ascending sort would
+    rows = [r.asDict() for r in out.collect()]
+    if args.by:
+        rows.sort(key=lambda r: (r[args.by] is not None, r[args.by], r["q"]))
+    else:
+        rows.sort(key=lambda r: r["q"])
     payload = {
         "collection": args.collection,
         "value_col": args.value_col,
         "k": args.k,
         "by": args.by,
-        "quantiles": [r.asDict() for r in out.collect()],
+        "quantiles": rows,
     }
     _emit(payload, args.out)
     return payload

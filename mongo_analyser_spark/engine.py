@@ -66,7 +66,8 @@ class Engine:
         analyser.py:242-322): dotted paths discovered engine-side via
         variant_explode, elected type = most common per path, full
         observed-type histogram included. Returns the same flat
-        {path: {"type", "count", "type_distribution"}} artifact shape."""
+        {path: {"type", "count", "type_distribution"}} artifact shape,
+        keyed in path order."""
         from mongo_analyser_spark.operators.melt_variant import infer_schema_variant
 
         rows = infer_schema_variant(df, doc_col, max_depth=max_depth).collect()
@@ -76,7 +77,7 @@ class Engine:
                 "count": r["n_docs"],
                 "type_distribution": dict(r["type_distribution"]),
             }
-            for r in rows
+            for r in sorted(rows, key=lambda r: r["path"])
         }
 
     # -- extension UDF registration (SURVEY §2.10 [EXT]) ------------------
@@ -191,7 +192,7 @@ class Engine:
         for r in hist_rows:
             hist.setdefault(r["field"], {})[r["type_tag"]] = r["cnt"]
         tops: dict[str, dict[str, int]] = {}
-        for r in top_rows:
+        for r in sorted(top_rows, key=lambda r: (r["field"], r["rnk"])):
             tops.setdefault(r["field"], {})[r["value"]] = r["cnt"]
 
         out: dict[str, dict] = {}

@@ -20,7 +20,7 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mongo_analyser_spark.operators.fanout import fanout_for_python, sort_plain
+from mongo_analyser_spark.operators.fanout import fanout_for_python
 
 from mongo_analyser_spark.functions.text import shingles, tokens
 
@@ -576,11 +576,6 @@ def hamming_pairs(
         .select("id_a", "id_b", hamming.alias("hamming"))
         .distinct()  # a close pair can collide in several bands
         .filter(F.col("hamming") <= max_hamming)
-        # r15 session-4 A/B: the distinct's exchange already bounds the
-        # range sampler's re-read (merge + filter over shuffle output),
-        # so the checkpoint was pure loss — bare sort (guide §2.4;
-        # dhash_pairs same-session 2.22 s ckpt vs 2.11 s bare)
-        .transform(sort_plain, "id_a", "id_b")
     )
 
 

@@ -58,65 +58,3 @@ def fanout_for_python(df: DataFrame, *key_cols: str) -> DataFrame:
             return df
     return df.repartition(n, *keys)
 
-
-def sort_after_python(df: DataFrame, *cols: str) -> DataFrame:
-    """Deterministic output sort for a per-row Python stage (r15,
-    guide §2.4 "an orderBy used only to make output deterministic").
-
-    A bare ``.orderBy`` directly on a MapInPandas output executes the
-    whole Python subtree TWICE: range partitioning first SAMPLES its
-    child to compute the partition bounds, then shuffles it — and with
-    no exchange between the codec stage and the sort, the sample pass
-    re-runs every encode/decode (measured on the webp row at sf0.1:
-    4.0 s with the bare orderBy, 2.4 s with this helper, output
-    identical including row order). Materializing the stage's output
-    first (``localCheckpoint``) bounds the re-read to the skinny
-    feature rows — orders of magnitude smaller than the decoded payload
-    input, the same artifact discipline as the dedup fingerprints.
-
-    The checkpoint hides the Python stage from the final visible plan,
-    so the pre-checkpoint frame is attached as ``_pre_sort_child`` for
-    the plan-pinning tests (tests/test_plans.py) to assert the fanout
-    exchange + MapInPandas shape on.
-
-    ``SPARK_GRAFT_SORT_CHECKPOINT=never`` falls back to the bare
-    ``orderBy`` — the same-session A/B lever tools use to price the
-    checkpoint per row (it is NOT free: on a row whose under-sort
-    segment is already bounded by a shuffle or broadcast artifact the
-    resample is cheap and the extra materialization job is pure loss —
-    the r15 session-3 finding on the recall-report family)."""
-    if os.environ.get("SPARK_GRAFT_SORT_CHECKPOINT", "auto") == "never":
-        return sort_plain(df, *cols)
-    # eager=False (r15 session-3): the eager form materialized at BUILD
-    # time, so composite consumers that take ``unsorted(...)`` (the
-    # recall reports) still paid the full checkpoint job for a frame
-    # they never execute. Lazily, the sort's range-sampling job is what
-    # materializes the partitions and the shuffle reuses them — same
-    # one-materialization guarantee for sorted consumers, zero cost for
-    # unwrapped ones.
-    out = df.localCheckpoint(eager=False).orderBy(*cols)
-    out._pre_sort_child = df
-    return out
-
-
-def sort_plain(df: DataFrame, *cols: str) -> DataFrame:
-    """Deterministic output sort WITHOUT the checkpoint — the right tail
-    when the segment under the sort is already bounded by a shuffle or
-    broadcast artifact, so the range sampler's re-read is cheap and the
-    checkpoint's extra materialization job is pure loss (r15 session-3
-    same-session A/B: the recall-report / ADC top-k family reads
-    0.03-0.43 s FASTER bare per row). Still attaches the pre-sort child
-    so plan pins and ``unsorted`` work identically on both tails."""
-    out = df.orderBy(*cols)
-    out._pre_sort_child = df
-    return out
-
-
-def unsorted(df: DataFrame) -> DataFrame:
-    """The frame BELOW a deterministic output sort (either tail form).
-    Composite consumers (recall reports) join/aggregate the top-k
-    frames, where the inner sort is dead weight — Catalyst does not
-    reliably eliminate it, and in the checkpointed form it costs a
-    materialization job plus a range exchange. Identical rows, order
-    dropped — safe exactly where consumption is order-insensitive."""
-    return getattr(df, "_pre_sort_child", df)

@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mongo_analyser_spark.operators.fanout import sort_after_python
 
 from mongo_analyser_spark.operators.melt import melt, melt_array_elements
 
@@ -63,7 +62,6 @@ def _stats_agg(melted: DataFrame, approx: bool = False) -> DataFrame:
             "min_ts",
             "max_ts",
         )
-        .orderBy("field")
     )
 
 
@@ -81,7 +79,6 @@ def _histogram_agg(melted: DataFrame) -> DataFrame:
     return (
         melted.groupBy("field", "type_tag")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy("field", "type_tag")
     )
 
 
@@ -122,9 +119,6 @@ def _top_values_agg(melted: DataFrame, k: int = 5, max_len: int = 256) -> DataFr
         counted.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("field", "value", "cnt", "rnk")
-        # r15: checkpoint before the sort — the bare orderBy re-ran the
-        # per-field ranking window in the range sampler (guide §2.4)
-        .transform(sort_after_python, "field", "rnk")
     )
 
 
@@ -193,5 +187,4 @@ def distinct_kmv(
             .alias("kmv_estimate"),
             F.lit(k).cast("long").alias("k"),
         )
-        .orderBy(group_col)
     )

@@ -244,5 +244,4 @@ def triangle_counts(edges: DataFrame, round_to: int = 6) -> DataFrame:
             .otherwise(F.lit(0.0))
             .alias("clustering_coeff"),
         )
-        .orderBy("node")
     )

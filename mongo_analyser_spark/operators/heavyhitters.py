@@ -102,7 +102,7 @@ def mg_heavy_hitters(
 ) -> DataFrame:
     """Merged final-k summary with certified guarantees:
     (key, mg_est, exact_cnt, deficit, deficit_bound, underestimate_ok,
-    deficit_ok), ordered by (mg_est desc, key). Items live in exactly
+    deficit_ok), unordered. Items live in exactly
     one md5 shard, so the merge is a union of the shard summaries
     followed by one more compression to ``k`` entries; the final
     row_number window runs over ≤ G·k aggregated rows (shrunk input —
@@ -142,5 +142,4 @@ def mg_merge(summ: DataFrame, key_name: str, k: int = 16) -> DataFrame:
             (est <= F.col("exact_cnt")).alias("underestimate_ok"),
             (deficit <= bound).alias("deficit_ok"),
         )
-        .orderBy(F.desc("mg_est"), F.asc(key_name))
     )

@@ -199,7 +199,6 @@ def infer_schema_variant(
                 F.array_sort(F.collect_list(F.struct("type_tag", "cnt")))
             ).alias("type_distribution"),
         )
-        .orderBy("path")
     )
 
 

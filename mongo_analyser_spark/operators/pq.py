@@ -36,7 +36,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from mongo_analyser_spark.operators.fanout import sort_plain, unsorted
 
 
 def _sub_l2(a: Column, b: Column) -> Column:
@@ -461,7 +460,6 @@ def pq_adc_topk_arrow(
     return (
         scored.withColumn("rnk", F.row_number().over(win).cast("int"))
         .where(F.col("rnk") <= k)
-        .transform(sort_plain, "qid", "rnk")
     )
 
 
@@ -507,7 +505,6 @@ def pq_adc_rerank_topk_arrow(
     return (
         rer.withColumn("rnk", F.row_number().over(win).cast("int"))
         .where(F.col("rnk") <= k)
-        .transform(sort_plain, "qid", "rnk")
     )
 
 
@@ -576,7 +573,6 @@ def pq_adc_topk(
     return (
         scored.withColumn("rnk", F.row_number().over(win).cast("int"))
         .where(F.col("rnk") <= k)
-        .transform(sort_plain, "qid", "rnk")
     )
 
 
@@ -626,7 +622,6 @@ def pq_adc_rerank_topk(
     return (
         rer.withColumn("rnk", F.row_number().over(win).cast("int"))
         .where(F.col("rnk") <= k)
-        .transform(sort_plain, "qid", "rnk")
     )
 
 
@@ -660,7 +655,6 @@ def pq_exact_topk(
     return (
         scored.withColumn("rnk", F.row_number().over(win).cast("int"))
         .where(F.col("rnk") <= k)
-        .transform(sort_plain, "qid", "rnk")
     )
 
 
@@ -688,7 +682,6 @@ def _overlap_report(exact: DataFrame, approx: DataFrame) -> DataFrame:
                 F.col("hits").cast("double") / F.col("k"), 6
             ).alias("recall_at_k"),
         )
-        .transform(sort_plain, "qid")
     )
 
 
@@ -731,17 +724,13 @@ def pq_recall_report(
             df, id_col, vec_col, query_ids, dim, m, k_cent, k,
             refine_steps=refine_steps,
         )
-    # r15: the report only counts overlaps — consume the top-k frames
-    # BELOW their deterministic output sorts (identical rows; the inner
-    # sort/checkpoint is dead weight under joins and aggregates), and
-    # count hits and k in ONE aggregation over a single left join (the
-    # ann_recall_report shape): the old semi-join + separate k-count
+    # r15: count hits and k in ONE aggregation over a single left join
+    # (the ann_recall_report shape): the old semi-join + separate k-count
     # consumed the exact-top-k subtree twice, leaning on runtime
     # exchange reuse to dedupe it. (qid, vid) is unique per side by
     # construction (row_number-filtered top-k), so the left join never
     # fans out and count(marker) IS the semi-join hit count.
-    adc = unsorted(adc)
-    exact = unsorted(pq_exact_topk(df, id_col, vec_col, query_ids, k))
+    exact = pq_exact_topk(df, id_col, vec_col, query_ids, k)
     return _overlap_report(exact, adc)
 
 
@@ -943,7 +932,6 @@ def ivfpq_topk_arrow(
     return (
         rer.withColumn("rnk", F.row_number().over(win2).cast("int"))
         .where(F.col("rnk") <= k)
-        .transform(sort_plain, "qid", "rnk")
     )
 
 
@@ -971,8 +959,7 @@ def ivfpq_recall_report(
         df, id_col, vec_col, query_ids, dim, centroids, m, k_cent,
         shortlist=shortlist, k=k, refine_steps=refine_steps, cb=cb,
     )
-    # r15: count-only consumption below the output sorts, hits and k in
-    # one aggregation over a single left join (see pq_recall_report)
-    approx = unsorted(approx)
-    exact = unsorted(pq_exact_topk(df, id_col, vec_col, query_ids, k))
+    # hits and k in one aggregation over a single left join (see
+    # pq_recall_report)
+    exact = pq_exact_topk(df, id_col, vec_col, query_ids, k)
     return _overlap_report(exact, approx)

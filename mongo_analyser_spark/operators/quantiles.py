@@ -109,7 +109,6 @@ def _quantiles_from_sample(sample: DataFrame, qs) -> DataFrame:
             ).alias("est"),
             F.col("n").cast("long").alias("n"),
         )
-        .orderBy("q")
     )
 
 
@@ -169,7 +168,6 @@ def bottomk_quantile_report(
                 "abs_err"
             ),
         )
-        .orderBy("q")
     )
 
 
@@ -227,5 +225,4 @@ def grouped_bottomk_quantiles(
             ).alias("est"),
             F.col("n").cast("long").alias("n"),
         )
-        .orderBy(group_col, "q")
     )

@@ -26,7 +26,6 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mongo_analyser_spark.operators.fanout import sort_plain
 
 
 def as_double_vec(col: Column | str) -> Column:
@@ -156,11 +155,6 @@ def brute_force_topk(
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("qid", "vid", "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-        # r15: the window's qid exchange bounds the range sampler's
-        # re-read (checkpoint measured neutral solo) and the bare tail
-        # skips the checkpoint's build-time planning pass — the recall
-        # reports consume this frame via unsorted() (guide §2.4)
-        .transform(sort_plain, "qid", "rnk")
     )
 
 
@@ -664,11 +658,6 @@ def ivf_topk(
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("qid", "vid", "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-        # r15: the window's qid exchange bounds the range sampler's
-        # re-read (checkpoint measured neutral solo) and the bare tail
-        # skips the checkpoint's build-time planning pass — the recall
-        # reports consume this frame via unsorted() (guide §2.4)
-        .transform(sort_plain, "qid", "rnk")
     )
 
 
@@ -751,11 +740,6 @@ def ann_srp_topk(
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("qid", "vid", "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-        # r15: the window's qid exchange bounds the range sampler's
-        # re-read (checkpoint measured neutral solo) and the bare tail
-        # skips the checkpoint's build-time planning pass — the recall
-        # reports consume this frame via unsorted() (guide §2.4)
-        .transform(sort_plain, "qid", "rnk")
     )
 
 
@@ -851,7 +835,4 @@ def brute_force_topk_arrow(
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("qid", "vid", "cos_sim", F.col("rnk").cast("int").alias("rnk"))
-        # r15 session-3 A/B: the window's qid exchange bounds the
-        # sampler's re-read — the bare sort wins here (guide §2.4)
-        .transform(sort_plain, "qid", "rnk")
     )

@@ -146,7 +146,6 @@ def theta_pair_overlap(
                 F.round(F.col("n_common") / F.col("n_union"), 6),
             ).alias("est_jaccard"),
         )
-        .orderBy("group_a", "group_b")
     )
 
 
@@ -206,7 +205,6 @@ def theta_overlap_report(
                 round_to,
             ).alias("err"),
         )
-        .orderBy("group_a", "group_b")
     )
 
 
@@ -259,7 +257,6 @@ def theta_pair_difference(sketches: DataFrame) -> DataFrame:
                 "est_b_only"
             ),
         )
-        .orderBy("group_a", "group_b")
     )
 
 
@@ -321,5 +318,4 @@ def theta_difference_report(
                 "err_b"
             ),
         )
-        .orderBy("group_a", "group_b")
     )

@@ -420,7 +420,6 @@ def q_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(_dec("l_discount")).cast("double") / cnt, 4).alias("avg_disc"),
             cnt.alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -519,7 +518,6 @@ def q_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
         .agg(F.sum(disc_price).cast("double").alias("revenue"))
-        .orderBy("n_name")
     )
 
 
@@ -650,7 +648,6 @@ def q_window_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
             3,
         )
         .select("o_custkey", "o_orderkey", "o_totalprice", "rnk")
-        .orderBy("o_custkey", "rnk")
     )
 
 
@@ -711,7 +708,6 @@ def q_rollup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_orders",
             "total_price",
         )
-        .orderBy("priority", "status")
     )
 
 
@@ -736,7 +732,6 @@ def q_cube_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
             "n_items",
         )
-        .orderBy("returnflag", "linestatus")
     )
 
 
@@ -791,7 +786,7 @@ def q_setops_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     both = cn.intersect(sn).select(F.lit("both").alias("tag"), "n")
     c_only = cn.subtract(sn).select(F.lit("customer_only").alias("tag"), "n")
     s_only = sn.subtract(cn).select(F.lit("supplier_only").alias("tag"), "n")
-    return both.unionByName(c_only).unionByName(s_only).orderBy("tag", "n")
+    return both.unionByName(c_only).unionByName(s_only)
 
 
 @register(
@@ -799,9 +794,10 @@ def q_setops_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SELECT DISTINCT event_type FROM events ORDER BY event_type",
 )
 def q_distinct_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct-sorted list (reference A11 sorted(set(models)))."""
+    """Distinct values (reference A11 sorted(set(models)); the order
+    is left to the consumer)."""
     ev = load_table(spark, sf_dir, "events")
-    return ev.select("event_type").distinct().orderBy("event_type")
+    return ev.select("event_type").distinct()
 
 
 @register(
@@ -828,7 +824,6 @@ def q_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr("percentile(value, 0.9)"), 4).alias("p90"),
             F.round(F.expr("percentile(value, 0.99)"), 4).alias("p99"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -904,7 +899,6 @@ def q_value_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr("approx_percentile(value, 0.9, 10000)"), 4).alias("p90"),
             F.round(F.expr("approx_percentile(value, 0.99, 10000)"), 4).alias("p99"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -932,7 +926,7 @@ def q_schema_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     schema = Engine(spark).infer_schema(load_table(spark, sf_dir, "documents"))
     rows = [(k, v["type"]) for k, v in schema.items()]
-    return spark.createDataFrame(rows, "field string, type string").orderBy("field")
+    return spark.createDataFrame(rows, "field string, type string")
 
 
 @register(
@@ -960,7 +954,7 @@ def q_q4_priority_with_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE EXISTS (
           SELECT 1 FROM lineitem
           WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        GROUP BY o_orderpriority ORDER BY o_orderpriority
+        GROUP BY o_orderpriority
         """
     )
 
@@ -1240,7 +1234,6 @@ def q_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
         )
         .agg(F.sum(rev).cast("double").alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -1280,7 +1273,6 @@ def q_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         supp.join(srev, F.col("s_suppkey") == F.col("l_suppkey"))
         .join(F.broadcast(best), F.col("total_rev") == F.col("m"))
         .select("s_suppkey", "s_name", F.col("total_rev").cast("double"))
-        .orderBy("s_suppkey")
     )
 
 
@@ -1371,7 +1363,6 @@ def q_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("mkt_share")
         )
-        .orderBy("o_year")
     )
 
 
@@ -1413,7 +1404,6 @@ def q_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_cust.groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
     )
 
 
@@ -1597,7 +1587,6 @@ def q_q22_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("numcust"),
             F.sum(_dec("c_acctbal")).cast("double").alias("totacctbal"),
         )
-        .orderBy("cntry")
     )
 
 
@@ -1687,7 +1676,6 @@ def q_retention_cohorts_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             k.cast("long").alias("day_offset"),
         )
         .agg(F.count(F.lit(1)).alias("n_users"))
-        .orderBy("cohort_day", "day_offset")
     )
 
 
@@ -1911,7 +1899,6 @@ def q_q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("o_orderdate").cast("long").alias("o_year"),
         )
         .agg(F.sum(amount).cast("double").alias("profit"))
-        .orderBy("nation", F.desc("o_year"))
     )
 
 
@@ -1957,7 +1944,6 @@ def q_q11_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         psv.crossJoin(F.broadcast(total))
         .filter(F.col("value") * 1000 > F.col("total"))
         .select("partkey", F.col("value").cast("double").alias("value"))
-        .orderBy(F.desc("value"), "partkey")
     )
 
 
@@ -2004,7 +1990,6 @@ def q_q16_supplier_relationship(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
     )
 
 
@@ -2064,7 +2049,6 @@ def q_q20_excess_share_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         supp.join(excess, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
         .join(F.broadcast(nation), F.col("n_nationkey") == F.col("s_nationkey"))
         .select("s_name", "n_name")
-        .orderBy("s_name")
     )
 
 
@@ -2108,7 +2092,6 @@ def q_time_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
           (to_date(ts), date_trunc('hour', ts)),
           (to_date(ts)),
           ())
-        ORDER BY day NULLS FIRST, hour NULLS FIRST
         """
     )
 
@@ -2172,7 +2155,6 @@ def q_q12_priority_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(high, F.lit(1))).alias("high_line_count"),
             F.count(F.when(~high, F.lit(1))).alias("low_line_count"),
         )
-        .orderBy("l_linestatus")
     )
 
 
@@ -2233,8 +2215,6 @@ def q_grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
           count(*) AS n
         FROM orders
         GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
-        ORDER BY g_status, g_priority,
-                 o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
         """
     )
 
@@ -2291,7 +2271,6 @@ def q_observed_type_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         mixed.select(label.alias("type_label"))
         .groupBy("type_label")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("type_label")
     )
 
 
@@ -2339,7 +2318,6 @@ def q_dynamic_schema_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         melt_variant(docs, "doc", max_depth=2, adaptive=False)
         .groupBy("path", "type_tag")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("path", "type_tag")
     )
 
 
@@ -2420,7 +2398,7 @@ def q_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("n_old"), F.lit(0)).cast("long").alias("n_old"),
         F.coalesce(F.col("n_new"), F.lit(0)).cast("long").alias("n_new"),
         status.alias("status"),
-    ).orderBy("path", "type_tag")
+    )
 
 
 _SCALAR_SUBQUERY_SQL = """
@@ -2432,11 +2410,10 @@ WHERE CAST(c_acctbal AS DECIMAL(18,2))
          WHERE c2.c_nationkey = c.c_nationkey)
       > (SELECT SUM(CAST(c2.c_acctbal AS DECIMAL(18,2))) FROM customer c2
          WHERE c2.c_nationkey = c.c_nationkey)
-ORDER BY c_custkey
 """
 
 
-@register("scalar_subquery_customers", _SCALAR_SUBQUERY_SQL)
+@register("scalar_subquery_customers", _SCALAR_SUBQUERY_SQL + "ORDER BY c_custkey\n")
 def q_scalar_subquery_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated SCALAR subquery (the other decorrelation shape next to
     q4's EXISTS): customers above their nation's average balance.
@@ -2511,7 +2488,6 @@ def q_schema_with_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at(type_map, F.col("field")).alias("type"),
             "cnt", "missing_pct", "distinct_cnt", "min_num", "max_num",
         )
-        .orderBy("field")
     )
 
 

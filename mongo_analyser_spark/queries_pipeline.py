@@ -34,12 +34,7 @@ from mongo_analyser_spark.operators.similarity import (
     brute_force_topk,
     srp_planes,
 )
-from mongo_analyser_spark.operators.fanout import (
-    fanout_for_python,
-    sort_after_python,
-    sort_plain,
-    unsorted,
-)
+from mongo_analyser_spark.operators.fanout import fanout_for_python
 from mongo_analyser_spark.operators.field_stats import TS_FMT
 from mongo_analyser_spark.queries import ORACLE_GENERATORS, register
 from mongo_analyser_spark.sources.parquet import (
@@ -151,7 +146,6 @@ def q_lang_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "avg_chars"
             ),
         )
-        .orderBy("lang")
     )
 
 
@@ -189,7 +183,7 @@ def q_unigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_analyser_spark.operators.quality import unigram_nll
 
     docs = load_table(spark, sf_dir, "documents")
-    return unigram_nll(docs).orderBy("doc_id")
+    return unigram_nll(docs)
 
 
 @register(
@@ -230,7 +224,7 @@ def q_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fanout REGRESSED kneser_ney 1.53 → 2.05 and was neutral on
     # tfidf_cosine_pairs, so those keep their bare scans)
     docs = fanout_for_python(load_table(spark, sf_dir, "documents"))
-    return bigram_nll(docs).orderBy("doc_id")
+    return bigram_nll(docs)
 
 
 @register(
@@ -269,7 +263,7 @@ def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_analyser_spark.operators.quality import char_entropy
 
     docs = fanout_for_python(load_table(spark, sf_dir, "documents"))
-    return char_entropy(docs).transform(sort_after_python, "doc_id")
+    return char_entropy(docs)
 
 
 @register(
@@ -315,7 +309,7 @@ def q_kneser_ney_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_analyser_spark.operators.quality import kneser_ney_nll
 
     docs = load_table(spark, sf_dir, "documents")
-    return kneser_ney_nll(docs).orderBy("doc_id")
+    return kneser_ney_nll(docs)
 
 
 @register(
@@ -354,7 +348,7 @@ def q_nb_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_analyser_spark.operators.quality import nb_classifier
 
     docs = load_table(spark, sf_dir, "documents")
-    return nb_classifier(docs, label=F.col("lang") == "en").orderBy("doc_id")
+    return nb_classifier(docs, label=F.col("lang") == "en")
 
 
 def _lang_detect_sql() -> str:
@@ -449,11 +443,7 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (north-star MinHash dedup, stage 1): k min-
     aggregates in one pass over exploded shingles."""
     docs = load_table(spark, sf_dir, "documents")
-    # r15 session-3 A/B: the min-aggregate's exchange bounds the range
-    # sampler's re-read — the bare sort wins (sort_plain, guide §2.4)
-    return minhash_signatures(docs, "doc_id", "text", NUM_MINHASH).transform(
-        sort_plain, "doc_id", "hash_idx"
-    )
+    return minhash_signatures(docs, "doc_id", "text", NUM_MINHASH)
 
 
 @register(
@@ -484,7 +474,7 @@ def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_verify(
         docs, pairs, "doc_id", "text",
         corpus_bytes=table_bytes(sf_dir, "documents"),
-    ).orderBy("doc_a", "doc_b")
+    )
 
 
 @register(
@@ -522,7 +512,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         train, test, "doc_id", "text",
         NUM_MINHASH, LSH_BANDS, LSH_ROWS, min_jaccard=0.5,
         train_bytes=table_bytes(sf_dir, "documents"),
-    ).transform(sort_after_python, "train_id", "test_id")
+    )
 
 
 def _ngram_list_sql(n: int) -> str:
@@ -566,9 +556,7 @@ def q_decontaminate_exact_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     test = docs.filter(F.col("doc_id") % 10 == 0)
     train = docs.filter(F.col("doc_id") % 10 != 0)
-    return exact_ngram_contamination(train, test, "doc_id", "text", n=8).orderBy(
-        "train_id"
-    )
+    return exact_ngram_contamination(train, test, "doc_id", "text", n=8)
 
 
 _BLOOM_BITS = 16384
@@ -744,7 +732,6 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             "exact_jaccard",
             F.round(est - F.col("exact_jaccard"), 6).alias("err"),
         )
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -773,7 +760,7 @@ def q_dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(
         docs, "doc_id", "text", min_jaccard=0.1,
         corpus_bytes=table_bytes(sf_dir, "documents"),
-    ).orderBy("doc_a", "doc_b")
+    )
 
 
 @register(
@@ -821,7 +808,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_a", "doc_b")
     return dedup_clusters(
         docs, pairs, "doc_id", left="doc_a", right="doc_b"
-    ).orderBy("id")
+    )
 
 
 @register(
@@ -944,7 +931,6 @@ def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(split_assign("doc_id").alias("split"), "lang")
         .groupBy("split", "lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("split", "lang")
     )
 
 
@@ -977,7 +963,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         stratified_take(docs, "lang", STRATA_QUOTAS, order)
         .select(F.col("doc_id").alias("id"), "lang")
-        .orderBy("id")
     )
 
 
@@ -1267,7 +1252,7 @@ def q_remove_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_analyser_spark.operators.dedup import remove_repeated_ngrams
 
     docs = load_table(spark, sf_dir, "documents")
-    return remove_repeated_ngrams(docs, n=5, min_docs=2).orderBy("doc_id")
+    return remove_repeated_ngrams(docs, n=5, min_docs=2)
 
 
 @register(
@@ -1326,7 +1311,7 @@ def q_remove_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_analyser_spark.operators.dedup import remove_repeated_spans
 
     docs = load_table(spark, sf_dir, "documents")
-    return remove_repeated_spans(docs, n=8, min_docs=2).orderBy("doc_id")
+    return remove_repeated_spans(docs, n=8, min_docs=2)
 
 
 PR_ITERS = 5
@@ -1394,7 +1379,7 @@ def q_pagerank_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     edges = pairs.select(both.alias("e")).select("e.src", "e.dst")
-    return pagerank(edges, iterations=PR_ITERS).orderBy("node")
+    return pagerank(edges, iterations=PR_ITERS)
 
 
 ORACLE_GENERATORS["pagerank_near_dup"] = _pagerank_sql
@@ -1523,16 +1508,11 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # r15: count-only consumption — take both top-k frames BELOW their
-    # deterministic output sorts (identical rows, inner sort dead under
-    # the join/aggregate; measured -0.2 s same-session A/B)
-    exact = unsorted(
-        brute_force_topk(emb, "vec_id", "embedding", ANN_QUERY_IDS, k=3)
+    exact = brute_force_topk(
+        emb, "vec_id", "embedding", ANN_QUERY_IDS, k=3
     ).select("qid", "vid")
-    approx = unsorted(
-        ann_srp_topk(
-            emb, "vec_id", "embedding", ANN_QUERY_IDS, SRP_PLANES, EMB_DIM, k=3
-        )
+    approx = ann_srp_topk(
+        emb, "vec_id", "embedding", ANN_QUERY_IDS, SRP_PLANES, EMB_DIM, k=3
     ).select("qid", F.col("vid").alias("a_vid"))
     hits = (
         exact.join(
@@ -1552,7 +1532,7 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_exact").cast("long").alias("n_exact"),
         F.col("n_hit").cast("long").alias("n_hit"),
         F.round(F.col("n_hit").cast("double") / F.col("n_exact"), 4).alias("recall"),
-    ).orderBy("qid")
+    )
 
 
 IVF_CELLS = 4
@@ -1613,15 +1593,11 @@ def q_ann_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # r15: count-only consumption — frames below their output sorts
-    # (see q_ann_recall_report)
-    exact = unsorted(
-        brute_force_topk(emb, "vec_id", "embedding", ANN_QUERY_IDS, k=3)
+    exact = brute_force_topk(
+        emb, "vec_id", "embedding", ANN_QUERY_IDS, k=3
     ).select("qid", "vid")
-    approx = unsorted(
-        ivf_topk(
-            emb, "vec_id", "embedding", ANN_QUERY_IDS, IVF_CELLS, EMB_DIM, k=3
-        )
+    approx = ivf_topk(
+        emb, "vec_id", "embedding", ANN_QUERY_IDS, IVF_CELLS, EMB_DIM, k=3
     ).select("qid", F.col("vid").alias("a_vid"))
     hits = (
         exact.join(
@@ -1641,7 +1617,7 @@ def q_ann_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_exact").cast("long").alias("n_exact"),
         F.col("n_hit").cast("long").alias("n_hit"),
         F.round(F.col("n_hit").cast("double") / F.col("n_exact"), 4).alias("recall"),
-    ).orderBy("qid")
+    )
 
 
 def _ann_ivf_sql() -> str:
@@ -1759,7 +1735,7 @@ ORDER BY doc_id, chunk_idx
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document chunking (the precursor to per-chunk embedding): 200-char
     windows with 50-char overlap, each with its 0-based offset. Pure
-    projection + explode — zero shuffle before the output sort; at
+    projection + explode — zero shuffle; at
     corpus scale chunking fuses into the scan that feeds the embedding
     stage (functions/text.chunk_spans)."""
     from mongo_analyser_spark.functions.text import chunk_spans
@@ -1776,7 +1752,6 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sp.off").alias("off"),
             F.col("sp.chunk").alias("chunk"),
         )
-        .transform(sort_after_python, "doc_id", "chunk_idx")
     )
 
 
@@ -1820,7 +1795,6 @@ def q_chunk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sp.tok_off").alias("tok_off"),
             F.col("sp.chunk").alias("chunk"),
         )
-        .transform(sort_after_python, "doc_id", "chunk_idx")
     )
 
 
@@ -1856,7 +1830,6 @@ def q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             "scale",
             F.array_join(F.col("q").cast("array<string>"), ",").alias("q_csv"),
         )
-        .transform(sort_after_python, "vec_id")
     )
 
 
@@ -1902,9 +1875,7 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_analyser_spark.operators.clustering import kmeans_step
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return kmeans_step(emb, "vec_id", "embedding", k=8, arrow=True).orderBy(
-        "cell", "pos"
-    )
+    return kmeans_step(emb, "vec_id", "embedding", k=8, arrow=True)
 
 
 #: target within-cell population — cells of ~60 vectors keep the exact
@@ -1969,7 +1940,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         ivf_centroids(semantic_cells(_emb_rows(sf_dir)), EMB_DIM),
         threshold=SEMANTIC_DEDUP_THRESHOLD,
-    ).orderBy("id")
+    )
 
 
 ORACLE_GENERATORS["semantic_dedup_embeddings"] = _semantic_dedup_sql
@@ -2001,7 +1972,7 @@ def q_multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.octet_length(payload).cast("long").alias("media_len"),
         F.md5(payload).alias("media_md5"),
         F.lit("text/plain").alias("mime"),
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -2158,7 +2129,6 @@ def q_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("quality").alias("min_quality"),
             F.max("quality").alias("max_quality"),
         )
-        .orderBy("decile")
     )
 
 
@@ -2237,7 +2207,6 @@ def q_quality_deciles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("quality").alias("min_quality"),
             F.max("quality").alias("max_quality"),
         )
-        .orderBy("decile")
     )
 
 
@@ -2270,7 +2239,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return pack_sequences(
         docs, "doc_id", token_count("text"), seq_len=256, group_width=100
-    ).orderBy("doc_id")
+    )
 
 
 def _pack_bpe_sql() -> str:
@@ -2317,7 +2286,7 @@ def q_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "n_bpe")
     return pack_sequences(
         counted, "doc_id", F.col("n_bpe"), seq_len=256, group_width=100
-    ).orderBy("doc_id")
+    )
 
 
 def _embedding_clusters_sql(sf_dir: str = ORACLE_SF_DIR) -> str:
@@ -2356,7 +2325,7 @@ def q_embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id_a", "id_b")
     return dedup_clusters(
         emb, pairs, "vec_id", left="id_a", right="id_b"
-    ).orderBy("id")
+    )
 
 
 ORACLE_GENERATORS["embedding_dedup_clusters"] = _embedding_clusters_sql
@@ -2400,7 +2369,6 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         mixture_sample(docs, "source", "doc_id", 0.5, 0.5)
         .select("doc_id", "source")
-        .orderBy("doc_id")
     )
 
 
@@ -2441,7 +2409,7 @@ def q_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return token_budget_select(
         scored, "doc_id", "quality", "n_tokens", 1, 2
-    ).orderBy("doc_id")
+    )
 
 
 @register(
@@ -2528,7 +2496,6 @@ def q_curation_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & F.coalesce("__s", F.lit(False))
             ).alias("decision"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -2598,7 +2565,7 @@ def q_pixel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(
         run,
         "doc_id long, width int, height int, channels int, mean_luma double",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -2631,7 +2598,7 @@ def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_analyser_spark.operators.quality import gopher_rules
 
     docs = load_table(spark, sf_dir, "documents")
-    return gopher_rules(docs).transform(sort_after_python, "doc_id")
+    return gopher_rules(docs)
 
 
 @register(
@@ -2678,7 +2645,6 @@ def q_dedup_report_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dup_rate"),
             F.max("c").cast("long").alias("max_group"),
         )
-        .orderBy("source")
     )
 
 
@@ -2762,7 +2728,6 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         with_bpe_token_count(base, "text", load_fixture_merges(), "n_bpe")
         .select("doc_id", "n_ws", "n_bpe")
-        .transform(sort_after_python, "doc_id")
     )
 
 
@@ -2825,7 +2790,6 @@ def q_pii_scrub_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id", *pii_counts("__s"), scrub_pii("__s").alias("scrubbed")
         )
-        .transform(sort_after_python, "doc_id")
     )
 
 
@@ -2859,7 +2823,6 @@ def q_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.select("doc_id", ascii_codes("text").alias("codes"))
         .select("doc_id", dhash_bits_expr(F.col("codes")).alias("dhash"))
-        .transform(sort_after_python, "doc_id")
     )
 
 
@@ -2959,8 +2922,6 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_weights(
         docs, F.col("lang") == "en", buckets=_DSIR_B,
         corpus_bytes=table_bytes(sf_dir, "documents"),
-    ).orderBy(
-        "doc_id"
     )
 
 
@@ -3055,7 +3016,7 @@ def q_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, width int, height int, channels int, "
         "mean_luma double, mean_delta double",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 def _bpe_pretok_counts_sql() -> str:
@@ -3107,7 +3068,6 @@ def q_bpe_token_counts_pretok(spark: SparkSession, sf_dir: str) -> DataFrame:
             base, "__t", load_fixture_merges(), "n_bpe", pretokenize=True
         )
         .select("doc_id", "n_bpe")
-        .transform(sort_after_python, "doc_id")
     )
 
 
@@ -3148,7 +3108,6 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         with_bpe_tokens(docs.select("doc_id", "text"), "text", load_fixture_merges())
         .select("doc_id", "bpe_tokens", "n_bpe")
-        .transform(sort_after_python, "doc_id")
     )
 
 
@@ -3200,7 +3159,7 @@ def q_token_budget_select_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "quality", "n_tokens")
     return token_budget_select(
         scored, "doc_id", "quality", "n_tokens", 1, 2
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -3526,7 +3485,6 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "codes_csv"
             ),
         )
-        .transform(sort_after_python, "vec_id")
     )
 
 
@@ -3896,10 +3854,8 @@ def q_pca_project_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the hash-oracled 64-dim sibling — the r15 driver canonicalizer
     crashed on the array column (pandas sort_values: unhashable list),
     so the row must be scalar-only for its external record to land.
-    The output sort is a bare range sort (sort_plain): the under-sort
-    segment is a 4-way explode over the operator's checkpointed JL
-    frame plus the broadcast fold — the materialized artifact already
-    bounds the sampler's re-read (the r15 decision rule).
+    The long form is this row's external contract: one row per
+    (vec_id, pos) with pos 1..k and the coordinate in val.
 
     posexplode_OUTER, deliberately (r16, guide §4.4 duplicate
     evaluation): plain posexplode makes InferFiltersFromGenerate add
@@ -3909,7 +3865,6 @@ def q_pca_project_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     per row (twice in the condition, once in the projection).
     ``proj`` is a transform over the non-null broadcast comps row, so
     it is never null/empty and OUTER emits the identical rows."""
-    from mongo_analyser_spark.operators.fanout import sort_plain
     from mongo_analyser_spark.operators.pca import pca_project_wide
 
     proj = pca_project_wide(
@@ -3920,7 +3875,7 @@ def q_pca_project_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.posexplode_outer("proj").alias("pos", "val")
     ).select(
         "vec_id", (F.col("pos") + 1).cast("int").alias("pos"), "val"
-    ).transform(sort_plain, "vec_id", "pos")
+    )
 
 
 _WIDE_CB_CACHE: dict[str, object] = {}
@@ -4006,7 +3961,7 @@ def q_jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.posexplode_outer("proj").alias("pos", "val")
     ).select(
         "vec_id", (F.col("pos") + 1).cast("int").alias("pos"), "val"
-    ).transform(sort_after_python, "vec_id", "pos")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -4055,9 +4010,7 @@ def q_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mongo_analyser_spark.operators.countmin import countmin_sketch
 
     ev = load_table(spark, sf_dir, "events")
-    return countmin_sketch(ev, F.col("user_id"), _CM_D, _CM_W).orderBy(
-        "row", "bucket"
-    )
+    return countmin_sketch(ev, F.col("user_id"), _CM_D, _CM_W)
 
 
 @register(
@@ -4385,9 +4338,6 @@ def q_theta_sketch_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("group").alias("grp"), "n_sketch", "theta", "est_distinct"
         )
-        # r15 session-3 A/B: the sketch aggregate's exchange bounds the
-        # sampler's re-read — the bare sort wins (guide §2.4)
-        .transform(sort_plain, "grp")
     )
 
 
@@ -4610,7 +4560,7 @@ def q_wav_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, sample_rate int, n_samples int, duration_s double,"
         " rms double, peak int, zero_crossings int",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -4649,7 +4599,6 @@ def q_ewma_smooth_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ewma_smooth(ev, "user_id", ["ts", "event_id"], "value", k=16)
         .select("event_id", "user_id", "value", "ewma", "residual")
-        .transform(sort_after_python, "event_id")
     )
 
 
@@ -4712,7 +4661,6 @@ def q_scd2_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__vt").isNull().alias("is_current"),
             "n_events",
         )
-        .transform(sort_after_python, "user_id", "version")
     )
 
 
@@ -4844,7 +4792,7 @@ def q_scd2_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("__hh.version").cast("long").alias("version"),
         F.col("__hh.event_type").alias("event_type"),
         F.col("__hh.__vt").isNull().alias("is_current"),
-    ).orderBy("user_id", "event_id")
+    )
 
 
 @register(
@@ -4894,9 +4842,7 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "media"
         ),
     )
-    return frame_sample(docs, "doc_id", "media", k=4).transform(sort_after_python, 
-        "doc_id", "frame_idx"
-    )
+    return frame_sample(docs, "doc_id", "media", k=4)
 
 
 @register(
@@ -4928,7 +4874,7 @@ def q_zscore_outliers_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    return zscore_outliers(ev, "event_type", "value").orderBy("event_id")
+    return zscore_outliers(ev, "event_type", "value")
 
 
 @register(
@@ -5023,7 +4969,7 @@ def q_wav_resample_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, sample_rate int, n_samples int, duration_s double,"
         " rms double, peak int, zero_crossings int",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -5118,7 +5064,7 @@ def q_wav_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, frame_idx int, n_samples int, rms double,"
         " peak int, zero_crossings int",
-    ).transform(sort_after_python, "doc_id", "frame_idx")
+    )
 
 
 @register(
@@ -5223,7 +5169,7 @@ def q_wav_multichannel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, channel int, n_samples int, mean double, rms double,"
         " peak double, zero_crossings int",
-    ).transform(sort_after_python, "doc_id", "channel")
+    )
 
 
 @register(
@@ -5320,7 +5266,7 @@ def q_wav_pcm24_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, n_samples int, mean double, rms double, peak int,"
         " zero_crossings int",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 def _deep_melt_sql(depth: int = 8) -> str:
@@ -5398,7 +5344,7 @@ def q_deep_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("type_tag") != "dict", F.col("value_json")).alias(
             "leaf_json"
         ),
-    ).transform(sort_after_python, "doc_id", "path")
+    )
 
 
 @register("deep_melt_arrow_documents", _deep_melt_sql(8))
@@ -5435,7 +5381,7 @@ def q_deep_melt_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("type_tag") != "dict", F.col("value_json")).alias(
             "leaf_json"
         ),
-    ).transform(sort_after_python, "doc_id", "path")
+    )
 
 
 @register(
@@ -5533,7 +5479,7 @@ def q_frame_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(
         run,
         "doc_id long, n_frames int, frame_idx int, frame_luma double",
-    ).transform(sort_after_python, "doc_id", "frame_idx")
+    )
 
 
 @register(
@@ -5618,7 +5564,7 @@ def q_gif_frame_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(
         run,
         "doc_id long, n_frames int, frame_idx int, frame_luma double",
-    ).transform(sort_after_python, "doc_id", "frame_idx")
+    )
 
 
 @register(
@@ -5712,7 +5658,7 @@ def q_avi_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(
         run,
         "doc_id long, n_frames int, frame_idx int, frame_luma double",
-    ).transform(sort_after_python, "doc_id", "frame_idx")
+    )
 
 
 @register(
@@ -5790,7 +5736,7 @@ def q_jpeg12_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return docs.mapInPandas(
         run, "doc_id long, mean_val double, max_val int"
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -5870,7 +5816,7 @@ def q_jpeg12p_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return docs.mapInPandas(
         run, "doc_id long, mean_val double, max_val int"
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -5951,7 +5897,7 @@ def q_jpeg12s_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return docs.mapInPandas(
         run, "doc_id long, mean_val double, max_val int"
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -6036,7 +5982,7 @@ def q_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return docs.mapInPandas(
         run, "doc_id long, mean_val double, max_val int"
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -6113,7 +6059,7 @@ def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(
         run,
         "doc_id long, n_chars int, n_lines int, first_line string",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -6217,7 +6163,7 @@ def q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, n_records int, http_status int, n_chars int, "
         "first_line string",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -6306,7 +6252,7 @@ def q_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(
         run,
         "doc_id long, canonical string, host string, path_depth int",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -6411,7 +6357,7 @@ def q_au_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, sample_rate int, n_samples int, duration_s double, "
         "rms double, peak int, zero_crossings int",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -6520,7 +6466,7 @@ def q_media_header_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(
         run,
         "doc_id long, mime string, width int, height int, n_frames int",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -6604,7 +6550,7 @@ def q_ico_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(
         run,
         "doc_id long, n_members int, mean_val double, max_val int",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -6722,7 +6668,7 @@ def q_aiff_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, channel int, n_samples int, mean double, "
         "rms double, peak double, zero_crossings int",
-    ).transform(sort_after_python, "doc_id", "channel")
+    )
 
 
 @register(
@@ -6816,7 +6762,7 @@ def q_id3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, version string, title string, artist string, "
         "year string, track string",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -6913,7 +6859,7 @@ def q_exif_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, make string, orientation int, iso int, "
         "exposure_den int, exif_after_strip boolean",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -7026,7 +6972,7 @@ def q_webdataset_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, n_samples int, n_files int, cls0 string, "
         "txt_len int, ppm_mean double",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -7110,7 +7056,7 @@ def q_pnm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return docs.mapInPandas(
         run, "doc_id long, mean_val double, max_val int"
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -7263,7 +7209,7 @@ def q_web_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, canonical string, encoding string, n_chars int, "
         "keep boolean",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -7361,7 +7307,7 @@ def q_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, n_urls int, first_loc string, "
         "mean_priority double",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -7439,7 +7385,7 @@ def q_charset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(
         run,
         "doc_id long, encoding string, certain boolean, n_chars int",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -7535,7 +7481,7 @@ def q_robots_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, allowed_private boolean, allowed_pub boolean, "
         "crawl_delay int, n_sitemaps int",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -7612,7 +7558,7 @@ def q_y4m_frame_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(
         run,
         "doc_id long, n_frames int, frame_idx int, frame_luma double",
-    ).transform(sort_after_python, "doc_id", "frame_idx")
+    )
 
 
 @register(
@@ -7704,7 +7650,7 @@ def q_mp4_jpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(
         run,
         "doc_id long, n_frames int, frame_idx int, frame_luma double",
-    ).transform(sort_after_python, "doc_id", "frame_idx")
+    )
 
 
 @register(
@@ -7812,7 +7758,7 @@ def q_flac_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, sample_rate int, n_samples int, duration_s double, "
         "rms double, peak int, zero_crossings int",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -7924,7 +7870,7 @@ def q_g711_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, sample_rate int, n_samples int, duration_s double, "
         "rms double, peak int, zero_crossings int",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 @register(
@@ -8028,7 +7974,7 @@ def q_webp_lossless_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, n_px int, mean_r double, mean_g double, "
         "mean_b double, peak int",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 _ADPCM_N = 24  # nibbles per doc — fixed so the oracle can unroll exactly
@@ -8183,7 +8129,7 @@ def q_adpcm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, sample_rate int, n_samples int, duration_s double, "
         "rms double, peak int, zero_crossings int",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 def _mp1_sql() -> str:
@@ -8334,7 +8280,7 @@ def q_mp1_subband_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         run,
         "doc_id long, sample_rate int, n_samples int, rms double, "
         "peak double, sb0_mean double",
-    ).transform(sort_after_python, "doc_id")
+    )
 
 
 # re-run tail curation so the registry order is import-order-robust (this

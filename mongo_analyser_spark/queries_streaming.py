@@ -37,7 +37,7 @@ FROM events GROUP BY 1, 2 ORDER BY 1
 def q_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time windows: count + value sum."""
     ev = load_table(spark, sf_dir, "events")
-    return tumbling_counts(ev, "ts", "1 hour", value_col="value").orderBy("window_start")
+    return tumbling_counts(ev, "ts", "1 hour", value_col="value")
 
 
 @register(
@@ -60,7 +60,7 @@ def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle expands each event into its containing windows with a
     LATERAL generate_series — exactly what Spark's window expansion does."""
     ev = load_table(spark, sf_dir, "events")
-    return sliding_counts(ev, "ts", "1 hour", "30 minutes").orderBy("window_start")
+    return sliding_counts(ev, "ts", "1 hour", "30 minutes")
 
 
 @register(
@@ -89,9 +89,7 @@ def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     merging-session aggregate — both define a session as
     [first_ts, last_ts + gap)."""
     ev = load_table(spark, sf_dir, "events")
-    return session_stats(ev, "ts", "30 minutes", ["user_id"]).orderBy(
-        "user_id", "session_start"
-    )
+    return session_stats(ev, "ts", "30 minutes", ["user_id"])
 
 
 @register(
@@ -120,7 +118,6 @@ def q_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format(F.min("ts"), TS_FMT).alias("min_ts"),
             F.date_format(F.max("ts"), TS_FMT).alias("max_ts"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -148,7 +145,6 @@ def q_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
             F.date_format("last_ts", TS_FMT).alias("last_ts"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -177,7 +173,6 @@ def q_dedup_first_event(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             F.date_format("ts", TS_FMT).alias("first_ts"),
         )
-        .orderBy("user_id", "event_type")
     )
 
 
@@ -223,7 +218,7 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("l_ts", TS_FMT).alias("click_ts"),
         F.date_format("r_ts", TS_FMT).alias("purchase_ts"),
         (F.unix_micros("r_ts") - F.unix_micros("l_ts")).alias("lag_us"),
-    ).orderBy("click_id", "purchase_id")
+    )
 
 
 # re-run tail curation so the registry order is import-order-robust (this

@@ -133,7 +133,9 @@ _ROW_COUNT_CACHE: dict[tuple, int] = {}
 
 def table_row_count(sf_dir: str, name: str) -> int:
     """Exact row count of a table from parquet footer metadata (zero
-    Spark jobs; memoized per process on file identity)."""
+    Spark jobs; memoized per process on file identity). A valid empty
+    table counts 0; a table directory holding no ``.parquet`` file
+    raises ``ValueError`` rather than reading as empty."""
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -144,18 +146,20 @@ def table_row_count(sf_dir: str, name: str) -> int:
             # recursive walk (r16, ADVICE): a Hive-partitioned layout
             # (key=value subdirectories) would silently count 0 under a
             # top-level-only listing and mis-size SRP band params
-            n = 0
-            for root, _dirs, files in os.walk(path):
-                for f in sorted(files):
-                    if f.endswith(".parquet"):
-                        n += pq.read_metadata(os.path.join(root, f)).num_rows
+            files = [
+                os.path.join(root, f)
+                for root, _dirs, names in os.walk(path)
+                for f in names
+                if f.endswith(".parquet")
+            ]
+            if not files:
+                raise ValueError(
+                    f"table_row_count({path}): no .parquet file under the "
+                    "table directory; refusing to mis-size downstream params"
+                )
+            n = sum(pq.read_metadata(f).num_rows for f in files)
         else:
             n = pq.read_metadata(path).num_rows
-        if n <= 0:
-            raise ValueError(
-                f"table_row_count({path}): 0 rows from footer metadata — "
-                "unexpected layout; refusing to mis-size downstream params"
-            )
         _ROW_COUNT_CACHE[key] = n
     return n
 
@@ -176,11 +180,12 @@ def table_bytes(sf_dir: str, name: str) -> int:
 
 
 def list_collections(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sorted collection names (analyser.py:237 `sorted(...)`)."""
+    """Sorted collection names (analyser.py:237 `sorted(...)`). The
+    order is set on the driver list; a local relation keeps it."""
     names = sorted(
         f[: -len(".parquet")] for f in os.listdir(sf_dir) if f.endswith(".parquet")
     )
-    return spark.createDataFrame([(n,) for n in names], "name string").orderBy("name")
+    return spark.createDataFrame([(n,) for n in names], "name string")
 
 
 def describe_indexes(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -190,7 +195,8 @@ def describe_indexes(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (zone maps), which drive predicate pushdown / row-group skipping the
     way Mongo indexes drive query plans. One footer read, driver-side —
     no data scan. Columns: (column, row_group, num_rows, min, max,
-    null_count); min/max stringified, None when the writer kept no stats."""
+    null_count), in (column, row_group) order; min/max stringified, None
+    when the writer kept no stats."""
     import pyarrow.parquet as pq
 
     meta = pq.ParquetFile(os.path.join(sf_dir, f"{name}.parquet")).metadata
@@ -212,6 +218,6 @@ def describe_indexes(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 )
             )
     return spark.createDataFrame(
-        rows,
+        sorted(rows, key=lambda r: (r[0], r[1])),
         "column string, row_group int, num_rows long, min string, max string, null_count long",
-    ).orderBy("column", "row_group")
+    )

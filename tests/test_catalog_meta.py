@@ -4,6 +4,7 @@ against DuckDB's parquet_metadata, and the L5 blocklist combinator."""
 from __future__ import annotations
 
 import duckdb
+import pytest
 
 from mongo_analyser_spark.llm.blocklist import filter_blocklisted
 from mongo_analyser_spark.sources.parquet import describe_indexes
@@ -132,3 +133,36 @@ def test_table_row_count_matches_scan_and_invalidates(spark, tmp_path):
     p.unlink()
     shutil.copytree(tmp_path / "docs2.parquet", p)
     assert src.table_row_count(sf_dir, "docs") == 7
+
+
+def test_table_row_count_empty_table_and_missing_files(spark, tmp_path):
+    """A valid empty table (footer num_rows 0) counts 0; a table
+    directory with no .parquet file at all raises a named error."""
+    from mongo_analyser_spark.sources import parquet as src
+
+    src._ROW_COUNT_CACHE.clear()
+    src.load_table(spark, SF, "documents").limit(0).write.parquet(
+        str(tmp_path / "empty.parquet")
+    )
+    assert src.table_row_count(str(tmp_path), "empty") == 0
+
+    (tmp_path / "bare.parquet").mkdir()
+    (tmp_path / "bare.parquet" / "_SUCCESS").write_text("")
+    with pytest.raises(ValueError, match="no .parquet file"):
+        src.table_row_count(str(tmp_path), "bare")
+
+
+def test_catalog_listings_are_ordered_without_a_spark_sort(spark):
+    """list_collections and describe_indexes order their driver-built
+    rows in Python; the plans carry no Sort node."""
+    from mongo_analyser_spark.plans.inspect import formatted_plan
+    from mongo_analyser_spark.sources.parquet import list_collections
+
+    names = list_collections(spark, SF)
+    got = [r["name"] for r in names.collect()]
+    assert got == sorted(got) and "documents" in got
+    idx = describe_indexes(spark, SF, "documents")
+    keys = [(r["column"], r["row_group"]) for r in idx.collect()]
+    assert keys == sorted(keys)
+    for df in (names, idx):
+        assert "Sort" not in formatted_plan(df)

@@ -56,6 +56,35 @@ def test_cli_stats_and_export_roundtrip(tmp_path):
     assert body.count("\n") == 6  # header + 5 rows
 
 
+def test_cli_stats_and_analyze_keep_key_and_row_order(spark, tmp_path):
+    """Registry rows and operators return unordered rows; the CLI and
+    Engine edge owns display order. stats lists collections by name,
+    analyze keys fields by name, and each field's top_values and
+    type_distribution run by (count desc, value asc)."""
+    from mongo_analyser_spark.__main__ import _build_parser, cmd_analyze, cmd_stats
+
+    parse = _build_parser().parse_args
+    stats = cmd_stats(parse(
+        ["stats", "--data", SF, "--out", str(tmp_path / "stats.json")]
+    ), spark)
+    names = list(stats["collections"])
+    assert names == sorted(names) and {"events", "nation"} <= set(names)
+
+    art = cmd_analyze(parse(
+        ["analyze", "--data", SF, "--collection", "events",
+         "--out", str(tmp_path / "analysis.json")]
+    ), spark)
+    fs = art["field_stats"]
+    assert list(fs) == sorted(fs)
+    by_count = lambda kv: (-kv[1], kv[0])  # noqa: E731
+    assert any(d.get("top_values") for d in fs.values())
+    for d in fs.values():
+        tops = list(d.get("top_values", {}).items())
+        assert tops == sorted(tops, key=by_count)
+        hist = list(d["type_distribution"].items())
+        assert hist == sorted(hist, key=by_count)
+
+
 def test_cli_errors_exit_nonzero():
     r = run_cli("stats", "--data", SF, "--collection", "not-a-collection")
     assert r.returncode != 0

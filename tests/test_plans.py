@@ -21,14 +21,6 @@ from mongo_analyser_spark.sources.parquet import load_table
 SF = "/root/testdata/sf0.001"
 
 
-def pre_sort(q):
-    """The r15 deterministic-output-sort fix checkpoints a query's
-    compute before its final orderBy (operators/fanout.sort_after_python),
-    which hides the compute subtree from the visible plan. Shape pins on
-    such rows read the attached pre-checkpoint child instead."""
-    return getattr(q, "_pre_sort_child", q)
-
-
 def test_filter_pushdown_and_column_pruning(spark):
     ev = load_table(spark, SF, "events")
     q = ev.filter(F.col("value") > 100).select("event_id", "value")
@@ -61,24 +53,23 @@ def test_fact_scaled_tables_carry_no_broadcast_hints(spark):
 
 def test_field_stats_shuffle_budget(spark):
     """The flagship melt + grouped aggregate. Exact count_distinct plans
-    as two shrinking shuffles (partial on (field,key), regroup on field)
-    + the tiny output sort = 3; each stage's input is strictly smaller.
-    The HLL (approx) variant for 100-TB runs must drop the distinct
-    cascade to a single agg shuffle + sort."""
+    as two shrinking shuffles (partial on (field,key), regroup on field);
+    each stage's input is strictly smaller. The HLL (approx) variant for
+    100-TB runs must drop the distinct cascade to a single agg shuffle."""
     from mongo_analyser_spark.operators.field_stats import field_stats
     from mongo_analyser_spark.sources.parquet import EVENTS_PROPS_SCHEMA
 
     # r16: +1 for the adaptive fanout exchange in the registry row
     # (REPARTITION_BY_NUM before the melt's from_json map pass —
     # auto-skipped, hence absent, when the scan provides parallel
-    # splits; the operator itself keeps the 3-exchange budget below)
+    # splits; the operator itself keeps the 2-exchange budget below)
     fs = QUERIES["field_stats_events"](spark, SF)
-    assert num_exchanges(fs) <= 4
+    assert num_exchanges(fs) <= 3
     ev = load_table(spark, SF, "events")
     fs_op = field_stats(ev, {"props": EVENTS_PROPS_SCHEMA})
-    assert num_exchanges(fs_op) <= 3
+    assert num_exchanges(fs_op) <= 2
     approx = field_stats(ev, {"props": EVENTS_PROPS_SCHEMA}, approx=True)
-    assert num_exchanges(approx) <= 2
+    assert num_exchanges(approx) <= 1
 
 
 def test_field_stats_fully_codegen(spark):
@@ -97,7 +88,7 @@ def test_topk_join_is_broadcast(spark):
     """similarity top-k broadcasts the tiny query side — a shuffle join
     would repartition the whole corpus per lookup batch."""
     q = QUERIES["similarity_topk_embeddings"](spark, SF)
-    plan = formatted_plan(pre_sort(q))
+    plan = formatted_plan(q)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
@@ -128,17 +119,17 @@ def test_q6_minimal_scan(spark):
 
 def test_stratified_take_single_window_shuffle(spark):
     """Deterministic stratified draw: exactly one data shuffle (the
-    window partition on the stratum key) + the output sort — same budget
-    as any top-k-per-group."""
+    window partition on the stratum key) — same budget as any
+    top-k-per-group."""
     q = QUERIES["stratified_sample_documents"](spark, SF)
-    assert num_exchanges(q) <= 2
+    assert num_exchanges(q) <= 1
 
 
 def test_ivf_topk_broadcasts_query_side(spark):
     """IVF candidate join: the probed-queries side is broadcast — a
     shuffle join would repartition the whole corpus per lookup batch."""
     q = QUERIES["ann_ivf_topk_embeddings"](spark, SF)
-    plan = formatted_plan(pre_sort(q))
+    plan = formatted_plan(q)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -229,15 +220,14 @@ def test_quality_deciles_approx_single_scan_histogram(spark):
 
 
 def test_chunk_documents_fuses_into_scan(spark):
-    """Chunking must stay scan → Generate → project (+ output sort):
-    one source scan, no join, no aggregation — at corpus scale it fuses
-    into the scan feeding the embedding stage."""
+    """Chunking must stay scan → Generate → project: one source scan, no
+    join, no aggregation, no output sort — at corpus scale it fuses into
+    the scan feeding the embedding stage."""
     q = QUERIES["chunk_documents"](spark, SF)
-    child = pre_sort(q)
-    plan = formatted_plan(child)
-    assert num_exchanges(child) == 0  # pure scan-fused compute
+    plan = formatted_plan(q)
+    assert num_exchanges(q) == 0  # pure scan-fused compute
     assert "Generate" in plan and "Join" not in plan and "Aggregate" not in plan
-    assert "Sort" in formatted_plan(q)  # deterministic output sort
+    assert "rangepartitioning" not in plan  # unordered output
 
 
 def test_q8_broadcast_hints_only_on_fixed_dims(spark):
@@ -351,9 +341,9 @@ def test_q20_semi_join_and_pushed_date_range(spark):
 
 def test_gopher_rules_single_projection(spark):
     """All five rule signals + verdict must fuse into the document scan:
-    the only exchange is the output sort — no joins, no aggregates."""
+    no exchange, no joins, no aggregates."""
     q = QUERIES["gopher_rules_documents"](spark, SF)
-    assert num_exchanges(q) == 1  # the doc_id output sort only
+    assert num_exchanges(q) == 0
     plan = formatted_plan(q)
     assert "Join" not in plan
 
@@ -380,12 +370,11 @@ def test_funnel_reuses_user_partitioning(spark):
 
 
 def test_retention_joins_stay_keyed(spark):
-    """Cohort ⋈ active-days is keyed on user_id; the only sort is the
-    tiny (cohort, k) output ordering."""
+    """Cohort ⋈ active-days is keyed on user_id, with no output sort."""
     q = QUERIES["retention_cohorts_events"](spark, SF)
     plan = formatted_plan(q)
     assert "CartesianProduct" not in plan
-    assert num_exchanges(q) <= 4  # cohort agg, distinct, rollup, sort
+    assert num_exchanges(q) <= 3  # cohort agg, distinct, rollup
 
 
 def test_remove_repeated_spans_no_window_no_per_position_rows(spark):
@@ -393,7 +382,7 @@ def test_remove_repeated_spans_no_window_no_per_position_rows(spark):
     inside the row, not as a doc-partitioned window, and the rebuild is
     an array expression — the plan must carry no Window node, no
     cartesian product, and shuffle gram HASHES (xxhash64), bounding the
-    shuffles to the three keyed probe stages + output sort."""
+    shuffles to the three keyed probe stages."""
     q = QUERIES["remove_repeated_spans_documents"](spark, SF)
     plan = formatted_plan(q)
     # r15: the xxhash64 gram projection runs once below the
@@ -403,20 +392,19 @@ def test_remove_repeated_spans_no_window_no_per_position_rows(spark):
     assert "hashpartitioning(g#" in plan
     assert "CartesianProduct" not in plan
     assert " Window" not in plan
-    assert num_exchanges(q) <= 5
+    assert num_exchanges(q) <= 4
 
 
 def test_bpe_counts_arrow_stage_zero_join_shuffles(spark):
     """The BPE count is a map-side Arrow stage fused over the scan: no
-    joins, no aggregates — the only exchange is the doc_id output sort.
-    Must be MapInPandas (broadcast merge table), never BatchEvalPython."""
+    joins, no aggregates, no exchange. Must be MapInPandas (broadcast
+    merge table), never BatchEvalPython."""
     q = QUERIES["bpe_token_counts_documents"](spark, SF)
-    child = pre_sort(q)
-    plan = formatted_plan(child)
+    plan = formatted_plan(q)
     assert "MapInPandas" in plan
     assert "BatchEvalPython" not in plan
     assert "Join" not in plan
-    assert num_exchanges(child) == 0  # map-side only; sort is checkpoint-fed
+    assert num_exchanges(q) == 0  # map-side only
 
 
 def test_tfidf_pairs_keyed_joins_and_hashed_prefix_keys(spark):
@@ -426,15 +414,12 @@ def test_tfidf_pairs_keyed_joins_and_hashed_prefix_keys(spark):
     re-derivation budget (runtime exchange reuse dedupes the shared
     subtrees — see test below)."""
     q = QUERIES["tfidf_cosine_pairs_documents"](spark, SF)
-    child = pre_sort(q)
-    plan = formatted_plan(child)
+    plan = formatted_plan(q)
     assert "CartesianProduct" not in plan
     assert "xxhash64" in plan
-    # r15: the budget is now measured on the full pre-checkpoint
-    # pipeline (the final sort used to truncate nothing, but the
-    # checkpoint moved it out of this plan); 35 static exchanges at r15,
+    # static exchanges over the full pipeline (28 measured, budget 35),
     # runtime-deduped via ReusedExchange (see test below).
-    assert num_exchanges(child) <= 35
+    assert num_exchanges(q) <= 35
 
 
 def test_tfidf_recall_report_runtime_reuses_postings_subtree(spark):
@@ -458,15 +443,14 @@ def test_pq_encode_is_broadcast_projection(spark):
     Arrow kernel the trained codebook ships to executors inside the
     mapInPandas closure (a BOUNDED driver artifact, the pca_components
     class) instead of a per-row broadcast join, so the encode plan is
-    ONE Arrow stage over the scan — no join of any kind, and the only
-    exchange is the output sort."""
+    ONE Arrow stage over the scan — no join of any kind and no
+    exchange."""
     q = QUERIES["pq_encode_embeddings"](spark, SF)
-    child = pre_sort(q)
-    plan = formatted_plan(child)
+    plan = formatted_plan(q)
     assert "CartesianProduct" not in plan
     assert "MapInPandas" in plan
     assert "Join" not in plan
-    assert num_exchanges(child) == 0  # one Arrow stage over the scan
+    assert num_exchanges(q) == 0  # one Arrow stage over the scan
 
 
 def test_pq_rerank_joins_stay_keyed_and_bounded(spark):
@@ -485,7 +469,7 @@ def test_token_budget_bpe_keeps_two_level_prefix_shape(spark):
     window over the corpus — the only partition-less window runs over
     the bounded per-level histogram)."""
     q = QUERIES["token_budget_select_bpe_documents"](spark, SF)
-    plan = formatted_plan(pre_sort(q))
+    plan = formatted_plan(q)
     assert "MapInPandas" in plan
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
@@ -505,20 +489,20 @@ def test_kneser_ney_single_corpus_stream_join(spark):
 def test_scd2_reuses_one_user_exchange(spark):
     """Gaps-and-islands SCD2: all three windows (lag flags, running-sum
     islands, lead interval-close) plus the island aggregate must ride
-    ONE user-keyed exchange — the plan may add only the output sort."""
+    ONE user-keyed exchange."""
     q = QUERIES["scd2_event_type_events"](spark, SF)
     plan = formatted_plan(q)
     assert "CartesianProduct" not in plan
-    assert num_exchanges(q) <= 3
+    assert num_exchanges(q) <= 2
 
 
 def test_ewma_single_series_exchange(spark):
     """Both trailing frames share the (user) partition: one hash
-    exchange + the output sort, nothing else."""
+    exchange, nothing else."""
     q = QUERIES["ewma_smooth_events"](spark, SF)
     plan = formatted_plan(q)
     assert "CartesianProduct" not in plan
-    assert num_exchanges(q) <= 2
+    assert num_exchanges(q) <= 1
 
 
 def test_mg_heavy_hitters_bounded_plan(spark):
@@ -540,7 +524,7 @@ def test_ivfpq_scan_reads_codes_not_floats(spark):
     codebook and LUT ship in kernel closures), and the rerank join is
     keyed, not cartesian."""
     q = QUERIES["ivfpq_topk_embeddings"](spark, SF)
-    plan = formatted_plan(pre_sort(q))
+    plan = formatted_plan(q)
     assert "CartesianProduct" not in plan
     assert plan.count("MapInPandas") >= 2  # encode stage + ADC kernel
 
@@ -555,15 +539,10 @@ def test_wav_rows_fan_out_before_python(spark):
         "wav_resample_features_documents",
     ):
         q = QUERIES[name](spark, SF)
-        # r15: the skinny feature output is checkpointed before the
-        # deterministic sort (sort_after_python — a bare orderBy would
-        # re-execute the Python stage in the range sampler), so the
-        # Python-stage shape is pinned on the pre-checkpoint child.
-        child = getattr(q, "_pre_sort_child", q)
-        plan = formatted_plan(child)
+        plan = formatted_plan(q)
         assert "MapInPandas" in plan
-        assert num_exchanges(child) >= 1, name  # explicit fanout
-        assert "Sort" in formatted_plan(q)  # deterministic output sort
+        assert num_exchanges(q) >= 1, name  # explicit fanout
+        assert "rangepartitioning" not in plan, name  # unordered output
 
 
 def test_scd2_pit_join_is_joinless(spark):
@@ -578,8 +557,8 @@ def test_scd2_pit_join_is_joinless(spark):
                  "CartesianProduct", "BroadcastNestedLoopJoin"):
         assert node not in plan, f"pair-producing {node} is back"
     # the interval build + the as-of window share the user-key exchange
-    # family; only the output sort may add one more
-    assert num_exchanges(q) <= 4
+    # family
+    assert num_exchanges(q) <= 3
 
 
 def test_ewma_stays_in_codegen(spark):
